@@ -1345,25 +1345,6 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_dedup_minhash_xx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Production-hash twin of ``dedup_minhash_lsh``: identical pipeline and
-    corpus, ``hash_fn='xxhash64'`` (Spark-native codegen'd hash) instead of
-    the DuckDB-portable md5 chain. No oracle_sql entry by design — DuckDB
-    has no xxhash64 twin, so the driver records the rows-only check; family
-    equivalence (same duplicate pair-set as the md5 path) is pinned by
-    tests/test_textops.py::test_minhash_hash_families_same_pairs, and the
-    md5-vs-xxhash64 throughput gap is a headline bench row."""
-    pairs = minhash_lsh_pairs(
-        _docs_with_copies(spark, sf_dir, modulus=20), k=8, bands=2,
-        hash_fn="xxhash64",
-    )
-    return pairs.filter(F.col("n_bands_matched") >= 2).select(
-        F.col("doc_a").cast("long").alias("doc_a"),
-        F.col("doc_b").cast("long").alias("doc_b"),
-        F.col("n_bands_matched").cast("long").alias("n_bands_matched"),
-    )
-
-
 def _minhash_ctes(k: int, bands: int, modulus: int) -> str:
     """Shared DuckDB CTE chain: docs2 (with shifted copies) → sh (distinct
     word shingles) → sigs (k portable min-hashes) → banded (LSH band keys)."""
@@ -2646,7 +2627,6 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         # training-data pipeline
         "dedup_exact": q_dedup_exact,
         "dedup_minhash_lsh": q_dedup_minhash,
-        "dedup_minhash_lsh_xx": q_dedup_minhash_xx,
         "dedup_lsh_jaccard": q_dedup_lsh_jaccard,
         "dedup_simhash": q_dedup_simhash,
         "ngram_jaccard": q_ngram_jaccard,

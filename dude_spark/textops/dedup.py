@@ -10,8 +10,14 @@ shapes that survive a 100 TB corpus:
   pairs only materialize per-bucket (self-join within tiny buckets).
 - **SimHash**: per-token 32-bit hashes, bit-majority vote computed as 32
   conditional aggregates in ONE groupBy — no per-bit row explosion.
-- **n-gram Jaccard**: exact pair verification via distinct (doc, shingle)
-  explode + equi-join on shingle — the standard verify stage after LSH.
+- **n-gram Jaccard**: exact pair verification — one array intersection
+  per LSH candidate pair, or a shingle equi-join within pre-bucketed data.
+
+Every per-document chain is a projection chain: the normalized token array
+is selected as a column ONCE, and grams and hashes are built from that
+column reference. Catalyst does not share subexpressions inside
+higher-order-function lambdas, so an inline ``tokens(col)`` would re-split
+the text once per gram position and once per hash function.
 
 Hashes are md5-derived (portable_hash32) so DuckDB oracles reproduce them.
 """
@@ -20,20 +26,10 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from . import fast_hash32, portable_hash32
+from . import portable_hash32
 
 DEFAULT_K = 16        # minhash signature length
 DEFAULT_BANDS = 4     # LSH bands (rows per band = K / BANDS)
-
-# hash family registry for the MinHash pipeline: 'md5' is the DuckDB-
-# portable oracle path (one md5 digest + hex substring + base conversion
-# per (salt, shingle) — CPU-heavy); 'xxhash64' is the production path
-# (Spark's native codegen'd hash, no digest/string materialization —
-# measured several× faster, same minhash/LSH statistics). Both map a
-# shingle to a uniform 32-bit value, so candidate quality is identical;
-# only the concrete hash values differ (tests/test_textops pins that both
-# families resolve the same duplicate pair-set on a seeded corpus).
-HASH_FNS = {"md5": portable_hash32, "xxhash64": fast_hash32}
 
 
 def normalize_text(col: Column) -> Column:
@@ -45,16 +41,17 @@ def tokens(col: Column) -> Column:
     return F.split(normalize_text(col), " ")
 
 
-def word_shingles(col: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles of the normalized text (array<string>).
+def _grams(t: Column, n: int) -> Column:
+    """Distinct ``n``-grams (array<string>) of a token-array column ``t``.
 
+    Pass a column REFERENCE (see :func:`_shingled`): ``t`` appears in every
+    gram position's lambda, so an inline expression is re-evaluated there.
     Docs shorter than ``n`` tokens yield an EMPTY array — ``sequence(1, x)``
     is descending for x < 1 in Spark, so the when-guard (not ``greatest``)
     is what keeps short docs from indexing ``element_at(t, 0)``.
     """
-    t = tokens(col)
     idx = F.sequence(F.lit(1), F.size(t) - (n - 1))
-    sh = F.when(
+    grams = F.when(
         F.size(t) >= n,
         F.transform(
             idx,
@@ -63,7 +60,41 @@ def word_shingles(col: Column, n: int = 3) -> Column:
             ),
         ),
     ).otherwise(F.expr("array()").cast("array<string>"))
-    return F.array_distinct(sh)
+    return F.array_distinct(grams)
+
+
+def word_shingles(col: Column, n: int = 3) -> Column:
+    """Distinct word n-gram shingles of the normalized text (array<string>)."""
+    return _grams(tokens(col), n)
+
+
+def _shingled(docs: DataFrame, text_col: str, n: int, *keep: str) -> DataFrame:
+    """(doc_id, *keep, sh): each doc's distinct ``n``-grams, with the token
+    array projected as its own column first. The upper projection names
+    that column many times, so CollapseProject keeps the split below it:
+    one split per document, not one per gram position."""
+    return docs.select("doc_id", *keep, tokens(F.col(text_col)).alias("t")).select(
+        "doc_id", *keep, _grams(F.col("t"), n).alias("sh")
+    )
+
+
+def _explode_array(df: DataFrame, arr: str, out: str, *keep: str) -> DataFrame:
+    """(*keep, out): one row per element of array column ``arr``.
+
+    ``explode_outer`` + a null filter, not ``explode``: for ``explode``
+    InferFiltersFromGenerate adds ``size(arr) > 0``, and predicate pushdown
+    then inlines the whole gram/hash expression into a Filter beneath the
+    projections, computing it twice. Gram and hash arrays hold no nulls, so
+    the rows are the same."""
+    return df.select(*keep, F.explode_outer(arr).alias(out)).filter(
+        F.col(out).isNotNull()
+    )
+
+
+def _salted_hash32(salt: str):
+    """One-argument lambda for ``F.transform``: a two-argument lambda would
+    receive the element index as its second argument."""
+    return lambda s: portable_hash32(s, salt=salt)
 
 
 def exact_duplicates(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -113,20 +144,20 @@ def minhash_signature(
 ) -> DataFrame:
     """(doc_id, sig array<bigint>[k]) — min over shingle hashes per function.
 
-    K hash functions = one hash per (salt i, shingle); all inside a single
-    projection over the shingle array (no explode, no shuffle).
-    ``hash_fn``: 'md5' (DuckDB-portable, oracle path) or 'xxhash64'
-    (native codegen'd hash, the production path — see HASH_FNS).
+    Hash function ``i`` is ``portable_hash32(shingle, salt=str(i))``, i.e.
+    ``int(md5(f"{i}:{shingle}")[:8], 16)``, all inside one projection over
+    the shingle column (no explode, no shuffle). ``hash_fn`` accepts only
+    ``'md5'``, the DuckDB-portable family.
     """
-    h = HASH_FNS[hash_fn]
-    sh = word_shingles(F.col(text_col), shingle_n)
+    if hash_fn != "md5":
+        raise ValueError(
+            f"hash_fn={hash_fn!r} is not supported; MinHash uses the portable "
+            "md5 family only (hash_fn='md5')"
+        )
     sig = F.array(
-        *[
-            F.array_min(F.transform(sh, lambda s, i=i: h(s, salt=str(i))))
-            for i in range(k)
-        ]
+        *[F.array_min(F.transform("sh", _salted_hash32(str(i)))) for i in range(k)]
     )
-    return docs.select("doc_id", sig.alias("sig"))
+    return _shingled(docs, text_col, shingle_n).select("doc_id", sig.alias("sig"))
 
 
 def minhash_lsh_pairs(
@@ -204,16 +235,21 @@ def ngram_jaccard_pairs(
 
     Two modes:
 
-    - ``candidates`` given (``doc_a``/``doc_b`` columns, e.g. the output of
-      :func:`minhash_lsh_pairs`): shingles are exploded ONLY for docs that
-      appear in a candidate pair and joined pair-wise — work is bounded by
-      the candidate set, never by corpus size. **This is the 100 TB path**:
-      a shingle-equi-join across a whole corpus bucket blows up on any hot
-      shingle, a candidate-bounded join cannot.
+    - ``candidates`` given (distinct ``doc_a``/``doc_b`` pairs, e.g. the
+      output of :func:`minhash_lsh_pairs`): each pair is joined to the two
+      docs' shingle arrays and ``inter = size(array_intersect(sha, shb))``
+      — exact, because both arrays are already distinct. Shingles are built
+      ONLY for docs in a candidate pair and nothing is exploded: work is
+      bounded by the candidate set, never by corpus size. **This is the
+      100 TB path**: a shingle-equi-join across a whole corpus bucket blows
+      up on any hot shingle, a candidate-bounded join cannot.
     - no candidates: shingle equi-join within ``bucket_cols`` buckets
       (same lang+source by default) — safe only on pre-bucketed/small data.
+      Each exploded shingle row carries its doc's set size, so one hash
+      aggregate yields the intersection and both sizes.
 
-    Pure relational either way; one hash aggregate for the intersection.
+    Pairs sharing no shingle are never emitted. Output
+    ``(doc_a, doc_b, inter long, jaccard)``.
     """
     if candidates is not None:
         cand = candidates.select("doc_a", "doc_b")
@@ -222,40 +258,37 @@ def ngram_jaccard_pairs(
             .unionAll(cand.select(F.col("doc_b").alias("doc_id")))
             .distinct()
         )
-        base = docs.join(involved, "doc_id", "left_semi").select(
-            "doc_id", word_shingles(F.col(text_col), shingle_n).alias("sh")
-        )
-        sizes = base.select("doc_id", F.size("sh").alias("n_sh"))
-        ex = base.select("doc_id", F.explode("sh").alias("s"))
-        inter = (
-            cand.join(
-                ex.select(F.col("doc_id").alias("doc_a"), "s"), "doc_a"
+        sh = _shingled(docs.join(involved, "doc_id", "left_semi"), text_col, shingle_n)
+        sha = sh.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sha"))
+        shb = sh.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("shb"))
+        pairs = (
+            cand.join(sha, "doc_a")
+            .join(shb, "doc_b")
+            .select(
+                "doc_a", "doc_b",
+                F.size(F.array_intersect("sha", "shb")).cast("long").alias("inter"),
+                F.size("sha").alias("na"),
+                F.size("shb").alias("nb"),
             )
-            .join(
-                ex.select(F.col("doc_id").alias("doc_b"), "s"), ["doc_b", "s"]
-            )
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count("*").alias("inter"))
+            .filter(F.col("inter") > 0)
         )
     else:
-        base = docs.select(
-            "doc_id", *bucket_cols, word_shingles(F.col(text_col), shingle_n).alias("sh")
+        sh = _shingled(docs, text_col, shingle_n, *bucket_cols)
+        ex = _explode_array(
+            sh.withColumn("n_sh", F.size("sh")), "sh", "s", "doc_id", "n_sh", *bucket_cols
         )
-        sizes = base.select("doc_id", F.size("sh").alias("n_sh"))
-        ex = base.select("doc_id", *bucket_cols, F.explode("sh").alias("s"))
         a, b = ex.alias("a"), ex.alias("b")
-        inter = (
+        pairs = (
             a.join(b, on=[*bucket_cols, "s"])
             .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-            .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+            .groupBy(
+                F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"),
+                F.col("a.n_sh").alias("na"), F.col("b.n_sh").alias("nb"),
+            )
             .agg(F.count("*").alias("inter"))
         )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb"))
     return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn(
+        pairs.withColumn(
             "jaccard",
             F.round(F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")), 6),
         )
@@ -287,25 +320,13 @@ def transitive_representatives(
     )
 
 
-def _gram_hash_array(text_col: str, k: int, hash_fn) -> Column:
-    """DISTINCT hashed token ``k``-grams of the normalized text, as one
-    array column — grams + hashes built inside a single projection (no
-    per-position rows are materialized). Shared by the span-dedup anchor
-    path and benchmark decontamination."""
-    t = tokens(F.col(text_col))
-    # sequence(1, 0) is DESCENDING in Spark ([1, 0]) — docs shorter than k
-    # tokens must yield an empty gram list, not two bogus indices.
-    idx = F.sequence(F.lit(1), F.size(t) - (k - 1))
-    grams = F.when(
-        F.size(t) >= k,
-        F.transform(
-            idx,
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(t, (i + j).cast("int")) for j in range(k)]
-            ),
-        ),
-    ).otherwise(F.expr("array()").cast("array<string>"))
-    return F.transform(F.array_distinct(grams), lambda g: hash_fn(g, "span"))
+def _gram_hashes(docs: DataFrame, text_col: str, k: int) -> DataFrame:
+    """(doc_id, gh array<bigint>): DISTINCT token ``k``-grams of the
+    normalized text, hashed — one projection chain, no per-position rows.
+    Shared by the span-dedup anchor path and benchmark decontamination."""
+    return _shingled(docs, text_col, k).select(
+        "doc_id", F.transform("sh", _salted_hash32("span")).alias("gh")
+    )
 
 
 def decontaminate(
@@ -313,7 +334,6 @@ def decontaminate(
     benchmark: DataFrame,
     k: int = 8,
     text_col: str = "text",
-    hash_family: str = "md5",
 ) -> DataFrame:
     """Benchmark decontamination: per-document count of DISTINCT verbatim
     ``k``-token grams shared with an evaluation/benchmark set — the GPT-3
@@ -331,15 +351,11 @@ def decontaminate(
     rows reach the final per-doc aggregation (partial-agg combined), so
     shuffle volume tracks contamination, not corpus size. Gram hashing and
     normalization are byte-identical to :func:`duplicated_span_docs`
-    (shared kernel), 'xxhash64' is the production hash twin.
+    (shared kernel).
     """
-    hash_fn = HASH_FNS[hash_family]
 
     def gram_rows(df: DataFrame) -> DataFrame:
-        return df.select(
-            F.col("doc_id"),
-            F.explode(_gram_hash_array(text_col, k, hash_fn)).alias("gh"),
-        )
+        return _explode_array(_gram_hashes(df, text_col, k), "gh", "gh", "doc_id")
 
     bench_dim = gram_rows(benchmark).select("gh").distinct()
     return (
@@ -355,7 +371,6 @@ def duplicated_span_docs(
     text_col: str = "text",
     k: int = 8,
     select_mod: int = 4,
-    hash_family: str = "md5",
 ) -> DataFrame:
     """Exact duplicated-span detection via content-defined anchor
     fingerprints (winnowing-style, Schleimer et al. 2003 — the scalable
@@ -377,26 +392,23 @@ def duplicated_span_docs(
     with at least one OTHER document.
 
     100 TB shape: grams + hashes + the mod-filter all happen inside ONE
-    projection (`transform`/`filter` over the token array — no per-position
+    projection chain (`transform`/`filter` over the gram array — no per-position
     rows exist until after ~(1-1/select_mod) of positions are pruned), then
     one explode of surviving anchors, a count-over-anchor window (one
     shuffle on a bigint key) and one hash-aggregate by doc — ONE corpus
     scan total; a self-join against a duplicated-anchor dim would plan the
     gram pipeline twice. Shuffle volume ≈ total_tokens / select_mod longs
-    — no pairwise comparison, no suffix array, no driver
-    state. ``hash_family='xxhash64'`` is the production twin (same
-    statistics, no md5 digest per gram); 'md5' is the DuckDB-oracle path.
+    — no pairwise comparison, no suffix array, no driver state.
 
     Reference parity: the reference engine has no corpus-dedup surface;
     this extends SURVEY §2's training-data-pipeline set.
     """
-    hash_fn = HASH_FNS[hash_family]
-    hashes = _gram_hash_array(text_col, k, hash_fn)
     anchors = F.array_distinct(
-        F.filter(hashes, lambda h: h % select_mod == F.lit(0))
+        F.filter("gh", lambda h: h % select_mod == F.lit(0))
     )
-    per_doc = docs.select(
-        F.col("doc_id"), F.explode(anchors).alias("anchor")
+    per_doc = _explode_array(
+        _gram_hashes(docs, text_col, k).select("doc_id", anchors.alias("a")),
+        "a", "anchor", "doc_id",
     )
     # window-over-anchor, NOT a self-join against a duplicated-anchor dim:
     # the join shape plans TWO corpus scans (both join inputs recompute the

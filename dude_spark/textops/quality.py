@@ -324,13 +324,15 @@ def top_ngrams(
     if n == 1:
         grams = F.col("toks")
     else:
-        parts = [F.expr(f"slice(toks, {j + 1}, size(toks) - {n - 1})")
-                 for j in range(n)]
+        # a doc shorter than n tokens gets empty slices, hence no grams; a
+        # Filter on size(toks) would instead be pushed beneath the
+        # projection and split every text a second time
+        m = F.greatest(F.size("toks") - (n - 1), F.lit(0))
+        parts = [F.slice("toks", j + 1, m) for j in range(n)]
         grams = parts[0]
         for p in parts[1:]:
             grams = F.zip_with(grams, p, lambda a, b: F.concat_ws(" ", a, b))
-    d = docs.select(t.alias("toks")).filter(F.size("toks") >= n)
-    exploded = d.select(F.explode(grams).alias("gram"))
+    exploded = docs.select(t.alias("toks")).select(F.explode(grams).alias("gram"))
     agg = exploded.groupBy("gram").agg(F.count("*").alias("cnt"))
     ordered = agg.orderBy(F.col("cnt").desc(), F.col("gram").asc()).limit(k)
     from pyspark.sql import Window
